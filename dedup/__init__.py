@@ -15,7 +15,9 @@ Modules:
     shingle    — normalization + token 5-gram shingling (batch/vectorized)
     minhash    — Spark-facing MinHash signature stage (pandas UDFs)
     simhash    — Spark-facing SimHash fingerprint stage
-    lsh        — band hashing, salted repartitioning, candidate pair generation
+    buckets    — the capped, salted bucket join every LSH lane pairs through
+                 (count pass, cap with dropped-mass audit, salted hot buckets)
+    lsh        — band-bucket candidate pair generation + its cap audit
     verify     — candidate pair verification (signature similarity)
     cluster    — union-find connected components (large-star/small-star joins)
     suffix     — partitioned suffix-array exact long-substring pass

@@ -30,6 +30,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from dedup.buckets import (
+    DEFAULT_BUCKET_CAP,
+    bucket_audit,
+    capped_probe_join,
+    capped_self_pairs,
+)
 from dedup.session import materialize
 
 
@@ -135,135 +141,21 @@ def hyperplane_buckets(
     return src.mapInPandas(bucketize, schema)
 
 
-HOT_BUCKET_MIN = 64    # buckets below this skip salting (one task is fine)
-DEFAULT_BUCKET_CAP = 2000  # same default discipline as DedupConfig.band_bucket_cap
-
-
-def bucket_join_sizes(cb: DataFrame, cap: int) -> tuple[DataFrame, DataFrame]:
-    """Two-pass bucket discipline for the vector-LSH joins, reusing
-    lsh.candidate_pairs' shape (dedup/lsh.py:93-123): pass 1 is the map-side
-    combinable count per bucket — partial counts shuffle, never members —
-    so over-cap buckets are identified and recorded BEFORE any join buffers
-    their rows. Returns (eligible sizes, dropped sizes). With n_bits=12
-    there are only 4096 buckets: one dense region at 10^9 vectors would
-    otherwise put 10^5+ rows in a single bucket and 10^10+ pairs in one
-    task (VERDICT r2 #1)."""
-    sizes = cb.groupBy("bucket").agg(F.count("*").alias("bucket_size"))
-    dropped = sizes.where(F.col("bucket_size") > cap)
-    eligible = sizes.where(F.col("bucket_size") <= cap)
-    return eligible, dropped
-
-
 def vector_lsh_audit(cb: DataFrame, cap: int) -> DataFrame:
-    """Compensative accounting for the vector-LSH path (the lsh_audit analog,
-    dedup/lsh.py:36-68): candidate rows dropped by the bucket cap are
-    surfaced, never silently lost. One row: (n_buckets, n_dropped_buckets,
-    eligible_rows, dropped_rows, row_recall_floor)."""
-    sizes = cb.groupBy("bucket").agg(F.count("*").alias("bucket_size"))
-    over = F.col("bucket_size") > cap
-    return sizes.agg(
-        F.count("*").alias("n_buckets"),
-        F.sum(over.cast("long")).alias("n_dropped_buckets"),
-        F.sum(F.when(~over, F.col("bucket_size")).otherwise(F.lit(0)))
-        .cast("long").alias("eligible_rows"),
-        F.sum(F.when(over, F.col("bucket_size")).otherwise(F.lit(0)))
-        .cast("long").alias("dropped_rows"),
-    ).withColumn(
+    """Compensative accounting for the vector-LSH path (the lsh_audit
+    analog): candidate rows dropped by the bucket cap are surfaced, never
+    silently lost. One row: (n_buckets, n_dropped_buckets, eligible_rows,
+    dropped_rows, row_recall_floor) — a projection of buckets.bucket_audit."""
+    return bucket_audit(cb, ["bucket"], cap).select(
+        "n_buckets", "n_dropped_buckets", "eligible_rows", "dropped_rows",
         "row_recall_floor",
-        F.round(
-            F.col("eligible_rows")
-            / F.greatest(F.col("eligible_rows") + F.col("dropped_rows"), F.lit(1)),
-            6,
-        ),
     )
-
-
-def _salted_probe_join(q: DataFrame, c: DataFrame, cap: int, salts: int
-                       ) -> DataFrame:
-    """Query-candidate bucket join with the count-cap-salt discipline:
-    candidate buckets over `cap` are dropped (compensative: use
-    vector_lsh_audit to quantify), hot-but-eligible buckets spread their
-    candidates across `salts` tasks (candidate keeps one salt, query
-    replicates to all), cold buckets join plain at salt 0. Inputs must carry
-    a `bucket` column; output has both sides' columns minus bookkeeping.
-
-    The candidate table is deliberately NOT materialized although it is
-    consumed twice (size pass + join): its upstream is a pruned scan plus
-    the bucketize matmul — recomputing that once more is far cheaper at
-    10^9 vectors than writing the full (id, vector, bucket) table to
-    executor-local storage. Contrast capped_bucket_self_join, where five
-    consumers and an expensive decode upstream flip that trade."""
-    eligible, _ = bucket_join_sizes(c, cap)
-    hot = F.col("bucket_size") >= HOT_BUCKET_MIN
-    c2 = (
-        c.join(eligible, "bucket")
-        .withColumn(
-            "salt",
-            F.when(hot, F.pmod(F.xxhash64("neighbor_id"), F.lit(salts)).cast("int"))
-            .otherwise(F.lit(0)),
-        )
-        .drop("bucket_size")
-    )
-    q2 = (
-        q.join(eligible, "bucket")
-        .withColumn(
-            "salt",
-            F.explode(
-                F.when(hot, F.sequence(F.lit(0), F.lit(salts - 1)))
-                .otherwise(F.array(F.lit(0)))
-            ),
-        )
-        .drop("bucket_size")
-    )
-    return q2.join(c2, ["bucket", "salt"]).drop("salt")
-
-
-def capped_bucket_self_join(f: DataFrame, id_col: str, cap: int,
-                            salts: int = 8) -> DataFrame:
-    """Within-bucket self-join (id_a < id_b) with the count-cap-salt
-    discipline over a (id, bucket, v) table — the vector-space analog of
-    lsh._salted_self_join. Cold buckets (< HOT_BUCKET_MIN rows) join plain
-    (bounded fan-out per key); hot-but-eligible buckets salt the left side
-    and replicate the right so one bucket spans `salts` tasks; over-cap
-    buckets are dropped before any member row is buffered.
-
-    The (id, bucket, v) table is consumed by the size pass plus all four
-    join branches; localCheckpoint materializes it once so upstream kernels
-    (e.g. the multimodal decode behind asset features) don't re-run per
-    branch — same discipline as the band/block tables in lsh.py/simhash.py
-    (eager=False: computed at the first action, no plan-cache aliasing)."""
-    f = materialize(f, eager=False)
-    eligible, _ = bucket_join_sizes(f, cap)
-    rows = f.join(eligible, "bucket")
-    cold = rows.where(F.col("bucket_size") < HOT_BUCKET_MIN).drop("bucket_size")
-    hot = rows.where(F.col("bucket_size") >= HOT_BUCKET_MIN).drop("bucket_size")
-
-    def pairs(left: DataFrame, right: DataFrame, extra) -> DataFrame:
-        return left.alias("a").join(
-            right.alias("b"),
-            on=[F.col("a.bucket") == F.col("b.bucket"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}")] + extra,
-        ).select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col("a.v").alias("v_a"),
-            F.col(f"b.{id_col}").alias("id_b"), F.col("b.v").alias("v_b"),
-        )
-
-    cold_pairs = pairs(cold, cold, [])
-    hot_left = hot.withColumn(
-        "salt", F.pmod(F.xxhash64(id_col), F.lit(salts)).cast("int")
-    )
-    hot_right = hot.withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))
-    )
-    hot_pairs = pairs(hot_left, hot_right, [F.col("a.salt") == F.col("b.salt")])
-    return cold_pairs.unionByName(hot_pairs)
 
 
 def vector_near_dup_pairs(
     df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     n_bits: int = 12, dim: int = 64, seed: int = 42,
     threshold: float = 0.9, bucket_cap: int = DEFAULT_BUCKET_CAP,
-    salts: int = 8,
 ) -> DataFrame:
     """Near-duplicate pairs over a raw embedding table: hyperplane-LSH
     buckets + capped/salted within-bucket self-join + cosine verify — the
@@ -271,13 +163,20 @@ def vector_near_dup_pairs(
     precomputed). Returns (id_a, id_b, cosine ≥ threshold), deduped.
     Batch ground truth for the incremental stream_vector_pairs path."""
     # carry_vec: (id, bucket, v) straight from the kernel — no id re-attach
-    # join (which at scale shuffles the vector payload a second time)
-    f = hyperplane_buckets(df, n_bits=n_bits, dim=dim, seed=seed,
-                           id_col=id_col, vec_col=vec_col, carry_vec=True)
+    # join (which at scale shuffles the vector payload a second time); the
+    # table feeds the count pass and both join branches, so it is
+    # materialized once (eager=False: computed at the first action, no
+    # plan-cache aliasing)
+    f = materialize(
+        hyperplane_buckets(df, n_bits=n_bits, dim=dim, seed=seed,
+                           id_col=id_col, vec_col=vec_col, carry_vec=True),
+        eager=False,
+    )
+    pairs, _ = capped_self_pairs(f, ["bucket"], id_col, bucket_cap,
+                                 payload=["v"])
     return (
-        capped_bucket_self_join(f, id_col, cap=bucket_cap, salts=salts)
-        .select(
-            "id_a", "id_b",
+        pairs.select(
+            F.col("key_a").alias("id_a"), F.col("key_b").alias("id_b"),
             F.round(_cosine(F.col("v_a"), F.col("v_b")), 4).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)
@@ -324,6 +223,8 @@ def quantizer_sample(candidates: DataFrame, sample_rows: int,
         # binomial shortfall at 4x oversampling is astronomically rare;
         # widen and rescan rather than fail determinism
         frac = min(1.0, frac * 4.0)
+    if not rows:  # empty candidate table: no sample, no centroids
+        return np.empty((0, 0))
     rows.sort(key=lambda r: (r["h"], r["i"]))
     m = np.vstack(
         [np.asarray(r["v"], dtype=np.float64) for r in rows[:sample_rows]]
@@ -336,6 +237,8 @@ def train_quantizer(candidates: DataFrame, n_centroids: int, seed: int,
     """Seeded spherical k-means on the bounded sample → (n_centroids, dim)
     unit-norm centroid matrix, tiny enough to ship in a UDF closure."""
     sample = quantizer_sample(candidates, sample_rows, id_col, vec_col)
+    if len(sample) == 0:
+        return sample
     sample /= np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
     rng = np.random.default_rng(seed)
     cent = sample[rng.choice(len(sample), size=min(n_centroids, len(sample)),
@@ -421,7 +324,7 @@ def ivf_topk(
     n_centroids: int = 32, nprobe: int = 8, seed: int = 42,
     sample_rows: int = 20000,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    cell_cap: int = DEFAULT_BUCKET_CAP, salts: int = 8,
+    cell_cap: int = DEFAULT_BUCKET_CAP,
 ) -> DataFrame:
     """IVF approximate top-k: k-means coarse quantizer; each query scores only
     the `nprobe` nearest centroid cells.
@@ -439,7 +342,7 @@ def ivf_topk(
     other bucket join in the engine (VERDICT r5 #1): the join key has only
     n_centroids (~32) distinct values, so a clustered embedding distribution
     at 10^12 rows would otherwise pin one cell's mass in a single task.
-    Hot-but-eligible cells salt the candidate side across `salts` tasks;
+    Hot-but-eligible cells salt the candidate side (buckets.capped_probe_join);
     cells over `cell_cap` rows are dropped compensatively — quantify with
     ivf_cell_audit before trusting a capped run."""
     centroids = train_quantizer(candidates, n_centroids, seed, sample_rows,
@@ -459,10 +362,8 @@ def ivf_topk(
         .withColumnRenamed("vec_id", "neighbor_id")
         .withColumnRenamed("v", "cv")
     )
-    scored = _salted_probe_join(
-        q.withColumnRenamed("cell", "bucket"),
-        c.withColumnRenamed("cell", "bucket"),
-        cell_cap, salts,
+    scored = capped_probe_join(
+        q, c, ["cell"], "neighbor_id", cell_cap
     ).withColumn("cos_raw", _cosine(F.col("qv"), F.col("cv")))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
     return (
@@ -480,14 +381,14 @@ def lsh_topk(
     queries: DataFrame, candidates: DataFrame, k: int = 5,
     n_bits: int = 12, dim: int = 64, seed: int = 42, multiprobe: bool = True,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    bucket_cap: int = DEFAULT_BUCKET_CAP, salts: int = 8,
+    bucket_cap: int = DEFAULT_BUCKET_CAP,
 ) -> DataFrame:
     """Approximate top-k: score only candidates sharing a (multi-probed)
     hyperplane bucket with the query. Equi-join on bucket id — shuffles scale
-    with bucket sizes, not |Q| x |C|. The join goes through the count-cap-salt
-    discipline (VERDICT r2 #1): candidate buckets over `bucket_cap` are
-    dropped (quantify via vector_lsh_audit), hot buckets are salted so a
-    dense embedding region can't pin one task."""
+    with bucket sizes, not |Q| x |C|. The join is buckets.capped_probe_join
+    (VERDICT r2 #1): candidate buckets over `bucket_cap` are dropped
+    (quantify via vector_lsh_audit), hot buckets are salted so a dense
+    embedding region can't pin one task."""
     # carry_vec: bucket + vector from one kernel pass per side — no id
     # re-attach joins (full payload shuffles at scale — guide §8)
     qb = hyperplane_buckets(queries, n_bits, dim, seed, id_col, vec_col,
@@ -507,7 +408,7 @@ def lsh_topk(
     q = qb.withColumnRenamed(id_col, "query_id").withColumnRenamed("v", "qv")
     c = cb.withColumnRenamed(id_col, "neighbor_id").withColumnRenamed("v", "cv")
     scored = (
-        _salted_probe_join(q, c, bucket_cap, salts)
+        capped_probe_join(q, c, ["bucket"], "neighbor_id", bucket_cap)
         .dropDuplicates(["query_id", "neighbor_id"])
         .withColumn("cos_raw", _cosine(F.col("qv"), F.col("cv")))
     )

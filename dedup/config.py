@@ -14,6 +14,8 @@ import hashlib
 import json
 from dataclasses import asdict, dataclass, field
 
+from dedup.buckets import DEFAULT_BUCKET_CAP
+
 
 @dataclass(frozen=True)
 class DedupConfig:
@@ -32,7 +34,7 @@ class DedupConfig:
     seed: int = 42               # master seed for all hash families
     jaccard_threshold: float = 0.7   # verification threshold (est. Jaccard)
     simhash_max_hamming: int = 3     # SimHash near-dup Hamming radius
-    band_bucket_cap: int = 2000      # max docs per LSH bucket before salting/capping
+    band_bucket_cap: int = DEFAULT_BUCKET_CAP  # max docs per LSH bucket
     min_content_len: int = 1         # shorter content skips the signature stages
                                      # (still exact-deduped; singleton otherwise)
     substring_min_len: int = 512     # suffix-array pass: min verbatim block length

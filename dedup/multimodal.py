@@ -34,7 +34,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from dedup.session import materialize
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -45,6 +44,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from dedup.buckets import DEFAULT_BUCKET_CAP, capped_self_pairs
+from dedup.session import materialize
 
 ASSET_SCHEMA = StructType(
     [
@@ -403,7 +405,7 @@ def asset_tile_hashes(assets: DataFrame, tile_px: int = TILE_PX,
 
 def asset_containment(assets: DataFrame, tile_px: int = TILE_PX,
                       max_tiles: int = MAX_TILES, min_shared: int = 2,
-                      cap: int = 2000) -> DataFrame:
+                      cap: int = DEFAULT_BUCKET_CAP) -> DataFrame:
     """Sub-image containment pairs (VERDICT r6 #8): a grid-aligned crop or
     pad of an asset shares its interior tile hashes with the original —
     the doc_containment analog with tiles for substrings. Reuses the repo
@@ -438,36 +440,38 @@ def asset_containment(assets: DataFrame, tile_px: int = TILE_PX,
 
 
 def asset_near_dups(assets: DataFrame, n_bits: int = 12, seed: int = 42,
-                    threshold: float = 0.92, bucket_cap: int = 2000,
-                    salts: int = 8) -> DataFrame:
+                    threshold: float = 0.92,
+                    bucket_cap: int = DEFAULT_BUCKET_CAP) -> DataFrame:
     """Perceptual near-duplicate pairs over decoded features: hyperplane-LSH
     buckets the unit vectors (dedup/ann.py path — one shuffle on bucket id,
     never all-pairs), cosine-verifies within buckets. A resized copy of an
     image or a re-padded copy of an audio clip pairs with its original.
 
-    The self-join goes through ann.capped_bucket_self_join (VERDICT r2 #1):
-    bucket counts first, over-cap buckets dropped before any member row is
-    buffered, hot-but-eligible buckets salted across `salts` tasks — a stub
-    decoder mapping many payloads near one another (or a dense perceptual
-    region: logo watermarks, silence) can't turn one bucket quadratic."""
-    from dedup.ann import _cosine, capped_bucket_self_join, hyperplane_buckets
+    The self-join is buckets.capped_self_pairs (VERDICT r2 #1): bucket
+    counts first, over-cap buckets dropped before any member row is
+    buffered, hot-but-eligible buckets salted — a stub decoder mapping many
+    payloads near one another (or a dense perceptual region: logo
+    watermarks, silence) can't turn one bucket quadratic."""
+    from dedup.ann import _cosine, hyperplane_buckets
 
     # decode → bucketize is one chained kernel pass; carry_vec emits
     # (asset_id, bucket, v) directly so no id re-attach join is needed, and
-    # the single downstream materialization (inside capped_bucket_self_join)
-    # keeps the decode to one execution across all join branches (the r7
-    # shape needed a second checkpoint of the feature table just to feed
-    # the join side)
-    f = hyperplane_buckets(
-        extract_features(assets).select("asset_id", "embedding"),
-        n_bits=n_bits, dim=FEATURE_DIM, seed=seed,
-        id_col="asset_id", vec_col="embedding", carry_vec=True,
+    # the single materialization keeps the decode to one execution across
+    # the count pass and both join branches
+    f = materialize(
+        hyperplane_buckets(
+            extract_features(assets).select("asset_id", "embedding"),
+            n_bits=n_bits, dim=FEATURE_DIM, seed=seed,
+            id_col="asset_id", vec_col="embedding", carry_vec=True,
+        ),
+        eager=False,
     )
+    pairs, _ = capped_self_pairs(f, ["bucket"], "asset_id", bucket_cap,
+                                 payload=["v"])
     return (
-        capped_bucket_self_join(f, "asset_id", cap=bucket_cap, salts=salts)
-        .select(
-            F.col("id_a").alias("asset_a"),
-            F.col("id_b").alias("asset_b"),
+        pairs.select(
+            F.col("key_a").alias("asset_a"),
+            F.col("key_b").alias("asset_b"),
             F.round(_cosine(F.col("v_a"), F.col("v_b")), 4).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dedup.buckets import PAIR_SLOTS
 from dedup.cluster import attach_singletons, connected_components
 from dedup.config import DedupConfig
 from dedup.lsh import candidate_pairs
@@ -663,7 +664,7 @@ def run_dedup(
         n_dropped = dropped.agg(
             F.coalesce(
                 # exact bigint pair-slot arithmetic, same as lsh_audit
-                F.sum(F.expr("bucket_size * (bucket_size - 1) DIV 2")),
+                F.sum(F.expr(PAIR_SLOTS)),
                 F.lit(0),
             )
         ).collect()[0][0]

@@ -16,7 +16,8 @@ from pyspark.sql import functions as F
 
 from dedup.ann import brute_force_topk, ivf_cell_audit, ivf_topk, lsh_topk
 from dedup.config import DedupConfig
-from dedup.lsh import bucket_sizes, candidate_pairs
+from dedup.buckets import bucket_sizes
+from dedup.lsh import BAND_KEYS, candidate_pairs
 from dedup.minhash import compute_bands, compute_signatures, with_doc_key
 from dedup.pipeline import exact_stage, key_docs, run_dedup, signature_input
 from dedup.session import materialize
@@ -399,10 +400,11 @@ SQL_JACCARD_CLEANED_DOCS = (
 # the replace() above must actually rewrite the clusters SQL's final SELECT;
 # if that tail is ever reformatted, fail here at import time instead of as a
 # confusing schema/value oracle mismatch later (ADVICE r5)
-assert SQL_JACCARD_CLEANED_DOCS != SQL_JACCARD_CLUSTERS.rstrip(), (
-    "SQL_JACCARD_CLEANED_DOCS replace() no-opped — final SELECT of "
-    "SQL_JACCARD_CLUSTERS changed without updating the template"
-)
+if SQL_JACCARD_CLEANED_DOCS == SQL_JACCARD_CLUSTERS.rstrip():
+    raise RuntimeError(
+        "SQL_JACCARD_CLEANED_DOCS replace() no-opped — final SELECT of "
+        "SQL_JACCARD_CLUSTERS changed without updating the template"
+    )
 
 
 def q_embedding_knn(spark, sf_dir):
@@ -1217,7 +1219,7 @@ def q_lsh_bucket_size_sum(spark, sf_dir):
     signature-eligible representatives — which SQL states without knowing
     any hash (same representative discipline as minhash_band_parity)."""
     bands = q_minhash_bands(spark, sf_dir)
-    return bucket_sizes(bands).agg(
+    return bucket_sizes(bands, BAND_KEYS).agg(
         F.sum("bucket_size").cast("long").alias("total_band_rows")
     )
 
@@ -1412,13 +1414,14 @@ def q_minhash_bands(spark, sf_dir):
 def q_lsh_bucket_sizes(spark, sf_dir):
     """Band-bucket size histogram (skew observability)."""
     bands = q_minhash_bands(spark, sf_dir)
-    return bucket_sizes(bands).where(F.col("bucket_size") > 1)
+    return bucket_sizes(bands, BAND_KEYS).where(F.col("bucket_size") > 1)
 
 
 def q_candidate_pairs(spark, sf_dir):
     """LSH candidate pairs (dedup stage 3 output). The two-pass bucket cap
     consumes the bands twice; checkpointing the signatures keeps the
-    shingle/MinHash kernel to one execution (run_dedup persists instead)."""
+    shingle/MinHash kernel to one execution (the same materialize run_dedup
+    applies to its signatures)."""
     keyed = key_docs(documents_as_corpus(spark, sf_dir))
     rep_docs, _ = exact_stage(keyed, need_pairs=False)
     rep_docs = signature_input(rep_docs, CFG)
@@ -2080,11 +2083,13 @@ QUERIES = {
 # exact truncation the reorder above exists to prevent. When this trips,
 # either the window grew (relax the bound) or the registry needs curating.
 _DRIVER_SNAPSHOT_WINDOW = 50
-assert len(ORACLES) <= _DRIVER_SNAPSHOT_WINDOW, (
-    f"{len(ORACLES)} oracle-backed queries exceed the driver's "
-    f"first-{_DRIVER_SNAPSHOT_WINDOW} correctness snapshot window; the "
-    "overflow would be silently unrecorded"
-)
-assert set(ORACLES) <= set(QUERIES), (
-    f"oracle entries without a queries() entry: {set(ORACLES) - set(QUERIES)}"
-)
+if len(ORACLES) > _DRIVER_SNAPSHOT_WINDOW:
+    raise RuntimeError(
+        f"{len(ORACLES)} oracle-backed queries exceed the driver's "
+        f"first-{_DRIVER_SNAPSHOT_WINDOW} correctness snapshot window; the "
+        "overflow would be silently unrecorded"
+    )
+if not set(ORACLES) <= set(QUERIES):
+    raise RuntimeError(
+        f"oracle entries without a queries() entry: {set(ORACLES) - set(QUERIES)}"
+    )

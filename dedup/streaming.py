@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from dedup.ann import HOT_BUCKET_MIN, _cosine
+from dedup.ann import _cosine
+from dedup.buckets import DEFAULT_BUCKET_CAP, capped_probe_join
 from dedup.config import DedupConfig
 from dedup.lsh import candidate_pairs
 from dedup.minhash import compute_bands, with_doc_key
@@ -624,64 +625,31 @@ def salted_new_vs_all_pairs(
     new_f: DataFrame,
     both: DataFrame,
     bucket_cap: int,
-    salts: int,
     threshold: float,
     id_col: str = "asset_id",
 ) -> DataFrame:
     """Capped+salted new-vs-(new+stored) bucket join for incremental vector
-    dedup — capped_bucket_self_join's discipline (dedup/ann.py:196) in the
-    asymmetric shape: bucket sizes are counted over the COMBINED old+new
-    population first (members never buffer for over-cap buckets); hot
-    eligible buckets (≥ HOT_BUCKET_MIN) assign the stored+new side one salt
-    by id hash while the new side replicates to all `salts` replicas, so a
-    single hot bucket spans `salts` tasks instead of relying on AQE to
-    split one join key; cold buckets join plain at salt 0. Exactly one
-    replica matches each stored row, so no pair duplicates from salting.
+    dedup: buckets.capped_probe_join with the new rows as the probe side and
+    the COMBINED old+new population as the build side, so bucket sizes are
+    counted over old+new before any member is buffered, and in hot buckets
+    the stored+new side keeps one id-hash salt while the new side
+    replicates — exactly one replica matches each stored row, so salting
+    duplicates no pair.
 
     `new_f` is (id_col, bucket, v); `both` is the same plus `is_new`
     (new rows pair a<b once, old rows pair against every new id). Returns
     (id_a, id_b, cosine) with cosine ≥ threshold, deduped; ids keep the
     caller's type (string asset ids, numeric vec ids)."""
-    sz = both.groupBy("bucket").agg(F.count("*").alias("sz"))
-    eligible = sz.where((F.col("sz") >= 2) & (F.col("sz") <= bucket_cap))
-    hot = F.col("sz") >= HOT_BUCKET_MIN
-    gated_new = (
-        new_f.join(eligible, "bucket")
-        .withColumn(
-            "salt",
-            F.explode(
-                F.when(hot, F.sequence(F.lit(0), F.lit(salts - 1)))
-                .otherwise(F.array(F.lit(0)))
-            ),
-        )
-        .drop("sz")
-    )
-    gated_all = (
-        both.join(eligible, "bucket")
-        .withColumn(
-            "salt",
-            F.when(hot, F.pmod(F.xxhash64(id_col), F.lit(salts)).cast("int"))
-            .otherwise(F.lit(0)),
-        )
-        .drop("sz")
-    )
-    a_first = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    a, b = F.col(f"p.{id_col}"), F.col(f"b.{id_col}")
     return (
-        gated_new.alias("a")
-        .join(
-            gated_all.alias("b"),
-            on=[
-                F.col("a.bucket") == F.col("b.bucket"),
-                F.col("a.salt") == F.col("b.salt"),
-                F.when(F.col("b.is_new"), a_first).otherwise(
-                    F.col(f"a.{id_col}") != F.col(f"b.{id_col}")
-                ),
-            ],
+        capped_probe_join(
+            new_f, both, ["bucket"], id_col, bucket_cap,
+            on=F.when(F.col("b.is_new"), a < b).otherwise(a != b),
         )
         .select(
-            F.least(f"a.{id_col}", f"b.{id_col}").alias("id_a"),
-            F.greatest(f"a.{id_col}", f"b.{id_col}").alias("id_b"),
-            F.round(_cosine(F.col("a.v"), F.col("b.v")), 4).alias("cosine"),
+            F.least(a, b).alias("id_a"),
+            F.greatest(a, b).alias("id_b"),
+            F.round(_cosine(F.col("p.v"), F.col("b.v")), 4).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)
         .dropDuplicates(["id_a", "id_b"])
@@ -695,8 +663,7 @@ def stream_asset_pairs(
     n_bits: int = 12,
     seed: int = 42,
     threshold: float = 0.92,
-    bucket_cap: int = 2000,
-    salts: int = 8,
+    bucket_cap: int = DEFAULT_BUCKET_CAP,
 ) -> DataFrame:
     """Incremental perceptual asset dedup — the multimodal surface joins the
     streaming story: decode features ONLY for assets not yet in the
@@ -723,11 +690,9 @@ def stream_asset_pairs(
     Cap semantics match suffix.incremental_anchored_candidates: a bucket is
     gated on its old+new population at the time its later member arrives,
     so incremental recall under caps is a superset of batch, never a
-    subset. Hot-but-eligible buckets follow capped_bucket_self_join's
-    salt discipline (ann.py:196): the stored+new side keeps one salt
-    (pmod of its id hash), the new side replicates across `salts` replicas,
-    so one hot bucket spans `salts` tasks instead of betting on AQE
-    skew-splitting a single join key; cold buckets join plain at salt 0.
+    subset. Hot-but-eligible buckets are salted (salted_new_vs_all_pairs),
+    so one hot bucket spans several tasks instead of betting on AQE
+    skew-splitting a single join key.
 
     Returns the ACCUMULATED deduped pair set (asset_a, asset_b, cosine)."""
     from dedup.ann import as_double, hyperplane_buckets
@@ -769,7 +734,7 @@ def stream_asset_pairs(
             old_f.withColumn("is_new", F.lit(False))
         )
     raw = salted_new_vs_all_pairs(
-        new_f, both, bucket_cap, salts, threshold
+        new_f, both, bucket_cap, threshold
     ).select(
         F.col("id_a").alias("asset_a"),
         F.col("id_b").alias("asset_b"),
@@ -789,7 +754,7 @@ def stream_asset_pairs(
 
 def read_stream_asset_pairs(
     wh: Warehouse, n_bits: int = 12, seed: int = 42, threshold: float = 0.92,
-    bucket_cap: int = 2000,
+    bucket_cap: int = DEFAULT_BUCKET_CAP,
 ) -> DataFrame:
     """Accumulated perceptual pairs, deduped on read (replays re-emit
     identical rows — the cosine is deterministic)."""
@@ -818,8 +783,7 @@ def stream_vector_pairs(
     n_bits: int = 12,
     seed: int = 42,
     threshold: float = 0.9,
-    bucket_cap: int = 2000,
-    salts: int = 8,
+    bucket_cap: int = DEFAULT_BUCKET_CAP,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -874,7 +838,7 @@ def stream_vector_pairs(
             old_f.withColumn("is_new", F.lit(False))
         )
     raw = salted_new_vs_all_pairs(
-        new_f, both, bucket_cap, salts, threshold, id_col=id_col
+        new_f, both, bucket_cap, threshold, id_col=id_col
     ).select(
         F.col("id_a").alias("vec_a"), F.col("id_b").alias("vec_b"), "cosine"
     )
@@ -894,7 +858,7 @@ def stream_vector_pairs(
 
 def read_stream_vector_pairs(
     wh: Warehouse, dim: int = 64, n_bits: int = 12, seed: int = 42,
-    threshold: float = 0.9, bucket_cap: int = 2000,
+    threshold: float = 0.9, bucket_cap: int = DEFAULT_BUCKET_CAP,
 ) -> DataFrame:
     """Accumulated vector pairs, deduped on read (replays re-emit identical
     rows — the cosine is deterministic)."""

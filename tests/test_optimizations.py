@@ -187,3 +187,25 @@ class TestNoCachedPlans:
             if pat in line and not line.lstrip().startswith("#")
         ]
         assert offenders == [], f"cached plans found in {offenders}"
+
+
+class TestOneBucketJoin:
+    def test_bucket_discipline_lives_in_buckets_module(self):
+        """The count-cap-salt discipline has one home, dedup/buckets.py:
+        no other engine module defines the hot-bucket threshold, the salt
+        count, the default cap, or a salt column of its own. kmv.py's
+        salted top-k fold is a different operator and stays out of scope."""
+        import pathlib
+        import re
+
+        pkg = pathlib.Path(__file__).resolve().parent.parent / "dedup"
+        banned = re.compile(
+            r'HOT_BUCKET_MIN\s*=|SALTS\s*=|BUCKET_CAP\s*=|\b2000\b|"salt"'
+        )
+        offenders = [
+            (p.name, line.strip()) for p in sorted(pkg.glob("*.py"))
+            if p.name not in ("buckets.py", "kmv.py")
+            for line in p.read_text().splitlines()
+            if banned.search(line) and not line.lstrip().startswith("#")
+        ]
+        assert offenders == [], offenders

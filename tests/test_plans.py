@@ -366,3 +366,24 @@ class TestIncrementalSubstringPlans:
         assert pair_mps, plan
         for cols in pair_mps:
             assert "content" not in cols and "wins_a" in cols, cols
+
+
+class TestBucketJoinPlans:
+    """Exchange-count fences for the lanes that pair through
+    dedup/buckets.py: the LSH lane's plan must not change (it is the
+    flagship's largest span), and the SimHash and asset lanes — whose cold
+    buckets now explode in place instead of self-joining — must not gain
+    shuffles over their previous 11."""
+
+    def test_candidate_pairs_exchange_count(self, spark):
+        from dedup.queries import q_candidate_pairs
+
+        plan = physical_plan(q_candidate_pairs(spark, SF))
+        assert plan.count("Exchange") == 9, plan
+
+    @pytest.mark.parametrize("name", ["simhash_pairs", "asset_near_dups"])
+    def test_self_pair_lanes_exchange_count(self, spark, name):
+        from dedup.queries import QUERIES
+
+        plan = physical_plan(QUERIES[name](spark, SF))
+        assert plan.count("Exchange") <= 11, plan

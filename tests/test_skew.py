@@ -7,7 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from dedup.config import DedupConfig
-from dedup.lsh import HOT_BUCKET_MIN, candidate_pairs
+from dedup.buckets import HOT_BUCKET_MIN, capped_self_pairs
+from dedup.lsh import candidate_pairs
 from dedup.minhash import compute_bands, compute_signatures
 from dedup.pipeline import exact_stage, key_docs
 
@@ -27,6 +28,57 @@ def _boilerplate_corpus(spark, n_copies: int):
     return key_docs(spark.createDataFrame(pd.DataFrame(rows)).repartition(4))
 
 
+N_DEGEN, N_COLD = 5000, 5
+
+
+def _lsh_lane(spark):
+    cfg = DedupConfig(band_bucket_cap=100)
+    pdf = pd.DataFrame(
+        {
+            "doc_key": [f"d{i:06d}" for i in range(N_DEGEN)]
+            + [f"c{i}" for i in range(N_COLD)],
+            "band_id": np.int32(0),
+            "band_hash": [np.int64(1)] * N_DEGEN + [np.int64(2)] * N_COLD,
+        }
+    )
+    bands = spark.createDataFrame(pdf).repartition(8)
+    pairs, dropped = candidate_pairs(bands, cfg)
+    d = dropped.collect()
+    assert len(d) == 1 and d[0]["bucket_size"] == N_DEGEN
+    return pairs, [f"c{i}" for i in range(N_COLD)]
+
+
+def _simhash_lane(spark):
+    from dedup.simhash import simhash_candidate_pairs
+
+    cfg = DedupConfig(band_bucket_cap=100)
+    pdf = pd.DataFrame(
+        {
+            "doc_key": [f"d{i:06d}" for i in range(N_DEGEN)]
+            + [f"c{i}" for i in range(N_COLD)],
+            "simhash": [np.int64(0)] * N_DEGEN + [np.int64(7)] * N_COLD,
+        }
+    )
+    sigs = spark.createDataFrame(pdf).repartition(8)
+    return simhash_candidate_pairs(sigs, cfg), [f"c{i}" for i in range(N_COLD)]
+
+
+def _vector_lane(spark):
+    from dedup.ann import vector_near_dup_pairs
+
+    # the degenerate cluster and the cold one point in opposite directions,
+    # so every hyperplane sign flips between them: two distinct buckets
+    base = np.array([1.0, 0.5, -0.25, 0.75, -1.0, 0.3, 0.2, -0.6])
+    rows = [dict(vec_id=i, embedding=base.tolist()) for i in range(N_DEGEN)]
+    rows += [dict(vec_id=10_000 + i,
+                  embedding=(-base + 1e-6 * i).tolist()) for i in range(N_COLD)]
+    df = spark.createDataFrame(pd.DataFrame(rows)).repartition(8)
+    pairs = vector_near_dup_pairs(df, n_bits=4, dim=8, bucket_cap=100)
+    return (pairs.withColumnRenamed("id_a", "key_a")
+            .withColumnRenamed("id_b", "key_b"),
+            [10_000 + i for i in range(N_COLD)])
+
+
 class TestBucketCap:
     def test_over_cap_buckets_dropped_and_recorded(self, spark):
         cfg = DedupConfig(band_bucket_cap=8)
@@ -37,31 +89,20 @@ class TestBucketCap:
         assert len(d) > 0, "over-cap buckets must be recorded, not silent"
         assert all(r["bucket_size"] > cfg.band_bucket_cap for r in d)
 
-    def test_degenerate_bucket_never_buffered(self, spark):
+    @pytest.mark.parametrize("lane", [_lsh_lane, _simhash_lane, _vector_lane],
+                             ids=["lsh", "simhash", "vector"])
+    def test_degenerate_bucket_never_buffered(self, spark, lane):
         """A planted over-cap bucket (10^7-member analog) must be dropped by
         the COUNT pass before any member list is collected: every collect_set
         in the optimized plan sits above the bucket_size join/filter, so task
         memory is bounded by HOT_BUCKET_MIN regardless of input skew
-        (VERDICT r1 'what's wrong' #1)."""
-        cfg = DedupConfig(band_bucket_cap=100)
-        n_degen, n_cold = 5000, 5
-        pdf = pd.DataFrame(
-            {
-                "doc_key": [f"d{i:06d}" for i in range(n_degen)]
-                + [f"c{i}" for i in range(n_cold)],
-                "band_id": np.int32(0),
-                "band_hash": [np.int64(1)] * n_degen + [np.int64(2)] * n_cold,
-            }
-        )
-        bands = spark.createDataFrame(pdf).repartition(8)
-        pairs, dropped = candidate_pairs(bands, cfg)
-
+        (VERDICT r1 'what's wrong' #1). One check per lane that pairs through
+        buckets.capped_self_pairs."""
+        pairs, cold = lane(spark)
         got = {(r["key_a"], r["key_b"]) for r in pairs.collect()}
         assert got == {
-            (f"c{i}", f"c{j}") for i in range(n_cold) for j in range(i + 1, n_cold)
+            (cold[i], cold[j]) for i in range(N_COLD) for j in range(i + 1, N_COLD)
         }, "cold bucket pairs intact, degenerate bucket contributes none"
-        d = dropped.collect()
-        assert len(d) == 1 and d[0]["bucket_size"] == n_degen
 
         def walk(node):
             yield node
@@ -151,35 +192,44 @@ class TestVectorBucketCap:
     discipline as the text path."""
 
     def test_degenerate_vector_bucket_dropped_before_join(self, spark):
-        from dedup.ann import capped_bucket_self_join
-
         f = _bucketed_vectors(spark, {1: 5000, 2: 5})
-        pairs = capped_bucket_self_join(f, "vec_id", cap=100, salts=4)
-        got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+        pairs, _ = capped_self_pairs(f, ["bucket"], "vec_id", cap=100,
+                                     payload=["v"])
+        got = {(r["key_a"], r["key_b"]) for r in pairs.collect()}
         expect = {
             (2_000_000 + i, 2_000_000 + j)
             for i in range(5) for j in range(i + 1, 5)
         }
         assert got == expect, "cold bucket intact, degenerate bucket dropped"
 
-    def test_vector_audit_records_dropped_mass(self, spark):
+    @pytest.mark.parametrize("empty", [False, True], ids=["planted", "empty"])
+    def test_vector_audit_records_dropped_mass(self, spark, empty):
+        """The empty candidate table audits to all zeros, never nulls."""
         from dedup.ann import vector_lsh_audit
 
         f = _bucketed_vectors(spark, {1: 5000, 2: 5})
+        if empty:
+            f = f.where(F.lit(False))
         row = vector_lsh_audit(f.select("vec_id", "bucket"), cap=100).collect()[0]
-        assert row["n_buckets"] == 2
-        assert row["n_dropped_buckets"] == 1
-        assert row["dropped_rows"] == 5000
-        assert row["eligible_rows"] == 5
+        want = (dict(n_buckets=0, n_dropped_buckets=0, dropped_rows=0,
+                     eligible_rows=0, row_recall_floor=0.0) if empty else
+                dict(n_buckets=2, n_dropped_buckets=1, dropped_rows=5000,
+                     eligible_rows=5, row_recall_floor=round(5 / 5005, 6)))
+        assert row.asDict() == want
+        if empty:
+            from dedup.ann import ivf_cell_audit
+
+            cell = ivf_cell_audit(f, n_centroids=4, cap=100,
+                                  vec_col="v").collect()[0]
+            assert cell.asDict() == want
 
     def test_hot_but_eligible_bucket_salted_pairs_once(self, spark):
-        from dedup.ann import HOT_BUCKET_MIN, capped_bucket_self_join
-
         n = HOT_BUCKET_MIN + 36
         f = _bucketed_vectors(spark, {3: n, 0: 3})
-        pairs = capped_bucket_self_join(f, "vec_id", cap=n + 50, salts=4)
+        pairs, _ = capped_self_pairs(f, ["bucket"], "vec_id", cap=n + 50,
+                                     payload=["v"])
         rows = pairs.collect()
-        seen = {(r["id_a"], r["id_b"]) for r in rows}
+        seen = {(r["key_a"], r["key_b"]) for r in rows}
         assert len(seen) == len(rows), "pair produced more than once"
         assert len(seen) == n * (n - 1) // 2 + 3, "every within-bucket pair exactly once"
 
@@ -200,8 +250,7 @@ class TestVectorBucketCap:
         q = spark.createDataFrame(
             pd.DataFrame([dict(vec_id=0, embedding=dense.tolist())])
         )
-        got = lsh_topk(q, cand, k=5, n_bits=4, dim=8, bucket_cap=50,
-                       salts=4).collect()
+        got = lsh_topk(q, cand, k=5, n_bits=4, dim=8, bucket_cap=50).collect()
         ids = [r["neighbor_id"] for r in got]
         assert len(ids) == len(set(ids)), "duplicate neighbors after salting"
         assert all(r["neighbor_id"] >= 400 for r in got), (
@@ -209,8 +258,7 @@ class TestVectorBucketCap:
         )
         # same call with a permissive cap routes the dense bucket through the
         # salted path and recovers the true near-identical neighbors
-        full = lsh_topk(q, cand, k=5, n_bits=4, dim=8, bucket_cap=2000,
-                        salts=4).collect()
+        full = lsh_topk(q, cand, k=5, n_bits=4, dim=8, bucket_cap=2000).collect()
         assert all(100 <= r["neighbor_id"] < 400 for r in full)
         assert len({r["neighbor_id"] for r in full}) == 5
 

@@ -831,13 +831,14 @@ class TestStreamingAssets:
 
     def test_hot_bucket_salted_join(self, spark):
         """A planted dominant bucket (≥ HOT_BUCKET_MIN combined rows, under
-        the cap) must follow capped_bucket_self_join's salt discipline in
+        the cap) must follow buckets.capped_probe_join's salt discipline in
         the incremental join (VERDICT r6 #2): the stored+new side keeps one
         id-hash salt, the new side replicates across all salts (plan-fenced
         explode + pmod), the pair set equals the naive all-pairs expectation
         exactly, and an over-cap bucket emits nothing."""
         from itertools import combinations
 
+        from dedup.buckets import SALTS
         from dedup.streaming import salted_new_vs_all_pairs
 
         def vec(i):
@@ -859,7 +860,7 @@ class TestStreamingAssets:
         )
 
         out = salted_new_vs_all_pairs(
-            new_f, both, bucket_cap=110, salts=8, threshold=0.92
+            new_f, both, bucket_cap=110, threshold=0.92
         )
         got = {(r["id_a"], r["id_b"]) for r in out.collect()}
 
@@ -879,7 +880,7 @@ class TestStreamingAssets:
         n_salts = (
             both.where(F.col("bucket") == 7)
             .select(
-                F.pmod(F.xxhash64("asset_id"), F.lit(8)).cast("int").alias("s")
+                F.pmod(F.xxhash64("asset_id"), F.lit(SALTS)).cast("int").alias("s")
             )
             .distinct()
             .count()
